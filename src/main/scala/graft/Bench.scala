@@ -327,7 +327,7 @@ object Bench {
         e.filter(col("vec_id") < 2), "vec_id", "embedding",
         k = 5, nCells = 8, nProbe = 4, kmeansIters = 2).count()
       // property-check + clean-pipeline shapes (inverted-index ground truth,
-      // estimator-deviation joins, component propagation): their first
+      // estimator-deviation joins, connected components): their first
       // execution Janino-compiles a dozen wide stages (~10 s measured) — a
       // per-process cost, paid here on a synthetic corpus of exact-dup
       // groups so every stage sees non-empty input (AQE would skip, and so

@@ -668,7 +668,7 @@ object Profile {
       // stage-level census: which stages carry the time under each gate
       // setting (the qRare-persist adjudication needed stage evidence)
       val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, Long)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      val stageListener = new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
             e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
           val i = e.stageInfo
@@ -678,7 +678,7 @@ object Profile {
             dt, i.taskMetrics.shuffleWriteMetrics.bytesWritten))
           ()
         }
-      })
+      }
       val store = s"/tmp/graft_bench_posidx_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
       if (!new java.io.File(s"$store/meta.json").exists())
         KeywordSearch.bm25IndexBuild(docs, "text", "doc_id", store,
@@ -690,18 +690,28 @@ object Profile {
         KeywordSearch.bm25PhraseBatch(spark, store, battery, "qid", "qtext", k = 10)
           .queryExecution.toRdd.foreach(_ => ()); 0L
       }
-      for (gate <- Seq("0", "200000000", "0", "200000000")) {
-        spark.conf.set("spark.graft.phraseVoteCopartitionRows", gate)
+      val gateKey   = "spark.graft.phraseVoteCopartitionRows"
+      val savedGate = spark.conf.getOption(gateKey)
+      spark.sparkContext.addSparkListener(stageListener)
+      try for (gate <- Seq("0", "200000000", "0", "200000000")) {
+        spark.conf.set(gateKey, gate)
+        // earlier stages' events must land BEFORE the clear, not after it
+        org.apache.spark.sql.GraftColumnBridge.drainListeners(spark.sparkContext)
         stages.clear()
         t(s"FULL phrase batch, gate=$gate") { full() }
-        Thread.sleep(300)
+        org.apache.spark.sql.GraftColumnBridge.drainListeners(spark.sparkContext)
         val slow = scala.jdk.CollectionConverters.CollectionHasAsScala(stages)
           .asScala.toSeq.filter(_._2 > 0.5).sortBy(-_._2).take(12)
         slow.foreach { case (n, dt, sw) =>
           println(f"    [stage] $dt%7.2f s  shufW=${sw / 1048576}%5d MB  $n")
         }
+      } finally {
+        savedGate match {
+          case Some(v) => spark.conf.set(gateKey, v)
+          case None    => spark.conf.unset(gateKey)
+        }
+        spark.sparkContext.removeSparkListener(stageListener)
       }
-      spark.conf.set("spark.graft.phraseVoteCopartitionRows", "200000000")
     }
 
     if (on("dsdict")) {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 
 /** End-to-end training-corpus cleaning: the composition a 100 TB pretraining
   * pipeline runs, built entirely from the engine's operators.
@@ -14,14 +13,15 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *                       the full CCNet/fineweb-style stack in one scan
   *   2. language gate  — heuristic lang-id agreement or allow-list
   *   3. exact dedup    — content-hash groupBy, deterministic survivor
-  *   4. near dedup     — MinHash-LSH pairs → connected components via
-  *                       iterated min-neighbor propagation → keep cluster min
+  *   4. near dedup     — MinHash-LSH pairs, verified by exact n-gram
+  *                       Jaccard → connected components ([[dupClusters]])
+  *                       → keep cluster min
   *
   * Every stage is a lazy plan; `clean` returns the cleaned corpus plus a
   * per-stage row-count audit (forced once at the end — one pass per stage,
-  * no driver loops). The near-dup component step iterates a bounded number
-  * of label-propagation rounds (diameter of dup clusters is tiny in
-  * practice; each round is one shuffle).
+  * no driver loops). The near-dup component step is a driver union-find
+  * when the pair table is small, else the logarithmic-round distributed
+  * connected components; both label each cluster by its minimum id.
   */
 object CorpusPipeline {
 
@@ -130,139 +130,66 @@ object CorpusPipeline {
                         cp: CompressionPlane): DataFrame =
     docs.filter(compressionCondition(textCol, cp))
 
-  /** Connected components over near-dup pairs via min-label propagation:
-    * every doc starts as its own label; each round adopts the smallest label
-    * among itself and its neighbors. Converges in O(cluster diameter)
-    * rounds — near-dup clusters are shallow, so `maxRounds` = 5 default.
+  /** Duplicate clusters of a near-dup pair frame `(id_a, id_b)`: one
+    * `(id, label)` row per node of any pair, `label` being the minimum id
+    * (under Spark's ordering) of the node's connected component, in the
+    * ids' common type. A node seen only in a self-pair keeps its own label.
     *
-    * Round shape: self-loop edges fold each node's OWN label into the same
-    * min-aggregate that scans its neighbors, so a round is ONE equality join
-    * + one map-side-combined min — not a neighbor join plus a second
-    * merge-with-own-label join. Convergence is detected from a bit_xor over
-    * per-row (id, label) hashes computed in the round's single action — any
-    * label move flips that row's term; a 2⁻⁶⁴ hash-collision
-    * false-stop is the price of not paying a second join per round, and
-    * `maxRounds` bounds the loop either way.
+    * The pair table is checkpointed first and its size — known for free
+    * once materialized — picks the path, the way Spark's broadcast-join
+    * threshold does: up to `maxDriverPairs` pairs (~16 MB of ids) an exact
+    * union-find on the driver replaces the distributed rounds' per-round
+    * job overhead; above it [[Dedup.connectedComponents]] runs the
+    * large-star/small-star rounds. Both work on the same order-preserving
+    * Long node codes ([[Dedup.NodeCodes]]), so the labels never depend on
+    * the path. `maxRounds` is the distributed path's refusal bound, with a
+    * floor of 50 (its rounds are logarithmic in the node count; it
+    * refuses loudly rather than return truncated, over-split clusters).
     */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 5,
                   maxDriverPairs: Long = 1L << 20): DataFrame = {
-    // Iterated joins double the lineage every round — without truncation the
-    // upstream (minhash) would recompute 2^rounds times. localCheckpoint
-    // materializes each round's small label table and cuts the plan.
-    // lazy checkpoints: the immediately-following action materializes them,
-    // so no separate eager job; lineage is still truncated from then on
     // checkpoint the pair table FIRST: it heads an expensive plan (the whole
-    // LSH/verify pipeline) and union branches do NOT share subplan results —
-    // every downstream branch would re-run it
+    // LSH/verify pipeline) and every consumer below would otherwise re-run
+    // it; lazy, because the count right after materializes it
     val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
-    // Adaptive execution, same idea as Spark's broadcast-join threshold: the
-    // pair table is already materialized, so its size is known for free.
-    // Below maxDriverPairs (~16 MB of ids) exact driver-side union-find
-    // replaces 3-5 distributed propagation rounds of pure job overhead;
-    // above it, the distributed loop is the only shape that survives.
-    if (p.count() <= maxDriverPairs) return driverUnionFind(p)
-    // INTEGRAL ids (every production corpus) take the large-star/small-star
-    // path (Dedup.connectedComponents): O(log² n) rounds with a
-    // NON-INCREASING edge count and a LOUD refusal on non-convergence —
-    // the propagation loop below stops silently at maxRounds, which on a
-    // deeper-than-maxRounds dup chain returns over-split labels. The
-    // propagation branch stays as the fallback for other id types
-    // (connectedComponents canonicalizes through Long, which would
-    // truncate fractional ids). The caller's round budget maps to the CC
-    // bound with a floor of 50: CC rounds are logarithmic (not
-    // diameter-bound like propagation's), and its bound is a refusal
-    // guard, never a silent truncation knob.
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType, DataType}
-    // BOTH id columns must be integral to take the CC path: the output
-    // `id` column carries values from both sides, so casting back through
-    // id_a's type alone would silently truncate a wider id_b (e.g. Int
-    // id_a, Long id_b). Mixed integral widths cast to the WIDER type;
-    // anything non-integral falls through to the generic propagation loop.
-    val integralWidth: Map[DataType, Int] =
-      Map(ByteType -> 1, ShortType -> 2, IntegerType -> 4, LongType -> 8)
-    val typeA = p.schema.fields(0).dataType
-    val typeB = p.schema.fields(1).dataType
-    if (integralWidth.contains(typeA) && integralWidth.contains(typeB)) {
-      val idType =
-        if (integralWidth(typeA) >= integralWidth(typeB)) typeA else typeB
-      val cc = Dedup.connectedComponents(p, "id_a", "id_b",
-          maxRounds = math.max(maxRounds, 50))
-        .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("label"))
-      // contract parity with the other two paths: a node appearing ONLY in
-      // self-pairs still gets its identity label (CC drops self-pairs);
-      // self-pairs are rare-to-absent in real pair frames, so the anti-join
-      // is metadata-sized
-      val selfOnly = p.filter(col("id_a") === col("id_b"))
-        .select(col("id_a").cast(idType).as("id")).distinct()
-        .join(cc, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label"))
-      return cc.unionByName(selfOnly)
-    }
-    val undirected = p.select(col("id_a").as("a"), col("id_b").as("b"))
-      .unionByName(p.select(col("id_b").as("a"), col("id_a").as("b")))
-    // edges/labels read the tiny checkpointed pair table — no further
-    // checkpoints needed, their plans are shallow and constant across rounds
-    val edges = undirected
-      .unionByName(undirected.select(col("a")).distinct().withColumn("b", col("a")))
-    def labelSig(df: DataFrame): Long = {
-      val r = df.agg(expr("bit_xor(xxhash64(id, label))")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    // round 1 fused into initialization: with identity labels the
-    // min-over-neighborhood is just min over the (self-looped) edge list —
-    // no label join needed
-    var labels = edges.groupBy(col("a")).agg(min(col("b")).as("label"))
-      .select(col("a").as("id"), col("label"))
-      .localCheckpoint(false)
-    var round   = 1
-    var changed = true
-    var prevSig = labelSig(labels)
-    while (round < maxRounds && changed) {
-      val next = edges
-        .join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
-        .groupBy(col("a")).agg(min(col("nl")).as("label"))
-        .select(col("a").as("id"), col("label"))
-        .localCheckpoint(false)
-      val s = labelSig(next)
-      changed = s != prevSig
-      prevSig = s
-      labels = next
-      round += 1
-    }
-    labels
+    if (p.count() <= maxDriverPairs)
+      return driverUnionFind(Dedup.NodeCodes(p, "id_a", "id_b", _.localCheckpoint(true)))
+        .withColumnRenamed("component", "label")
+    val cc = Dedup.connectedComponents(p, "id_a", "id_b", maxRounds = math.max(maxRounds, 50))
+      .withColumnRenamed("component", "label")
+    // connectedComponents drops self-pairs: a node seen ONLY in one gets its
+    // identity label here (self-pairs are rare-to-absent in real pair
+    // frames, so the anti-join is metadata-sized)
+    val selfOnly = p.filter(col("id_a") === col("id_b"))
+      .select(col("id_a").cast(cc.schema("id").dataType).as("id")).distinct()
+      .join(cc, Seq("id"), "left_anti")
+      .select(col("id"), col("id").as("label"))
+    cc.unionByName(selfOnly)
   }
 
   /** Exact connected components on the driver for collectable pair sets:
-    * path-halving union-find, then each component labeled with its minimum
-    * id — the same (id, label) contract the distributed rounds produce,
-    * minus their per-round job overhead and round bound. */
-  private def driverUnionFind(p: DataFrame): DataFrame = {
-    val rows = p.collect()
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
+    * path-halving union-find over the Long node codes, each union keeping
+    * the smaller root, so every root is its component's minimum — the
+    * `(id, component)` contract of [[Dedup.connectedComponents]] without
+    * its rounds. Self-pairs register their node like any other pair. */
+  private def driverUnionFind(codes: Dedup.NodeCodes): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: Long, y: Long)     => x < y
-      case (x: Int, y: Int)       => x < y
-      case (x: String, y: String) => x < y
-      case (x: Double, y: Double) => x < y
-      case (x, y)                 => String.valueOf(x) < String.valueOf(y)
+    codes.edges.collect().foreach { row =>
+      if (!row.anyNull) {
+        val a = row.getLong(0); val b = row.getLong(1)
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val ra = find(a); val rb = find(b)
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
     }
-    rows.foreach { r =>
-      val a = r.get(0); val b = r.get(1)
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    // roots are already component minima: unions always keep the smaller id
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size)
-    parent.keys.foreach(id => out.add(org.apache.spark.sql.Row(id, find(id))))
-    val idType = p.schema.fields(0).dataType
-    p.sparkSession.createDataFrame(out,
-      StructType(Seq(StructField("id", idType), StructField("label", idType))))
+    val spark = codes.edges.sparkSession
+    import spark.implicits._
+    codes.decode(parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "component"))
   }
 
   def clean(

@@ -267,17 +267,7 @@ object Dedup {
   ): DataFrame = {
     val k    = bands * rowsPerBand
     val sigs = scope.persisted(sigFrame, sigStorage)
-    // band bucket = native per-band hash of the signature (one tiny loop
-    // expression instead of a bands-wide hash(slice(…)) projection);
-    // carry ONLY ids through the exploded self-join; signatures rejoin later
-    val banded = sigs.select(col("id"),
-        posexplode(graft.functions.SketchFunctions.band_hashes(col("sig"), bands, rowsPerBand)))
-      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    val candidates = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    candidates
+    bandCollisions(sigs, bands, rowsPerBand)
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -285,6 +275,25 @@ object Dedup {
           .cast(DoubleType) / lit(k)).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
+
+  /** LSH band rows of an (id, sig) signature frame: one `(out, band,
+    * bucket)` row per band, bucket = native per-band hash of the signature
+    * slice. Every banding candidate generator here joins these rows on
+    * (band, bucket), so only ids ride through the join. */
+  private def bandRows(sigs: DataFrame, out: String, bands: Int, rows: Int): DataFrame =
+    sigs.select(col("id").as(out),
+        posexplode(graft.functions.SketchFunctions.band_hashes(col("sig"), bands, rows)))
+      .select(col(out), col("pos").as("band"), col("col").as("bucket"))
+
+  /** Distinct `(id_a, id_b)`, `id_a < id_b`, of the docs sharing at least
+    * one band bucket — a self-equality join of [[bandRows]], never a
+    * cross join. Both join sides read `sigs`, so callers pass a persisted
+    * frame. */
+  private def bandCollisions(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
+    bandRows(sigs, "id_a", bands, rows)
+      .join(bandRows(sigs, "id_b", bands, rows), Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
 
   // ---------------------------------------------------------------- simhash
 
@@ -773,19 +782,19 @@ object Dedup {
     * layout finds only ~23% of pairs near j = 0.3, a silent-miss regime the
     * fixture's high-similarity duplicates never exercised.
     *
-    * Candidates are pre-pruned by the minhash ESTIMATE at
-    * `threshold - 0.2` (~4σ below the mean for k ≥ 84 hashes — pruning a
-    * true pair is a ~1e-4 event) so the exact array-intersect join touches a near-final pair
-    * set instead of every band collision.
+    * EVERY band collision is verified exactly — the candidates are the
+    * distinct band-bucket collisions, with no minhash-estimate pre-prune
+    * (the [[crossNearDup]] shape). The signature slots are
+    * Kirsch–Mitzenmacher double hashes (`h1 + i·h2`), which are
+    * correlated, so the estimate's spread is far wider than independent
+    * hashing would give: an exact-Jaccard-0.93 pair can estimate at 0.46.
+    * A pair that shares a band bucket is therefore never dropped before
+    * its exact verify.
     *
-    * Everything per-document is a SCAN expression (r8): signatures via the
+    * Everything per-document is a SCAN expression: signatures via the
     * fused [[graft.functions.MinHashSigWindows]] kernel and exact shingle
     * sets via [[graft.functions.WindowStrings]] for CANDIDATE-touched docs
-    * only — the former pipeline persisted exploded (id, shingle) rows at
-    * corpus × words size (DISK_ONLY against the executor-memory cliff) and
-    * re-aggregated them twice; now no shingle relation exists at all.
-    * `shingleStorage` is retained for signature persistence (the banding +
-    * two rejoins consume the signature table).
+    * only — no exploded (id, shingle) relation exists at all.
     */
   def ngramJaccard(
       df: DataFrame,
@@ -795,31 +804,23 @@ object Dedup {
       threshold: Double = 0.5,
       bands: Int = 0,
       rowsPerBand: Int = 0,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
       scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) =
       if (bands > 0 && rowsPerBand > 0) (bands, rowsPerBand)
       else if (lshDetectProb(threshold, 32, 4) >= 0.98) (32, 4)
       else lshAutoParams(threshold)
-    val candidates = minhashLshFromSignatures(
-        minhashSignaturesRowLocal(df, textCol, idCol, n, b * r), b, r,
-        threshold = math.max(0.0, threshold - 0.2),
-        sigStorage = shingleStorage, scope = scope)
-      .select("id_a", "id_b")
-      // PERSISTED (scope-tracked), not checkpointed, for the THREE
-      // consumers below (twice via the candIds union, plus the final pair
-      // join). Same executor-storage bytes either way (both materialize
-      // the pair set on the block managers), but persist keeps the
-      // lineage — an executor loss recomputes the lost partitions instead
-      // of failing the job (localCheckpoint is documented unsafe under
-      // executor loss, a real concern on a 1000-executor cluster) — and
-      // CacheScope.release() frees the blocks deterministically instead
-      // of waiting for driver GC + ContextCleaner. The r8 lazy-CHECKPOINT
-      // race (a first touch inside a multi-branch plan racing its own
-      // block writes — the invariant DedupChecks documents) does not
-      // apply to a cache: a cached partition computes once under the
-      // block-manager lock and concurrent branches wait on it.
+    // both sides of the band self-join read the signatures
+    val sigs = scope.persisted(minhashSignaturesRowLocal(df, textCol, idCol, n, b * r),
+      StorageLevel.MEMORY_AND_DISK)
+    val candidates = bandCollisions(sigs, b, r)
+      // scope-persisted, not checkpointed, for the THREE consumers below
+      // (the candIds union twice, the pair join): persist keeps the
+      // lineage, so an executor loss recomputes lost partitions where a
+      // localCheckpoint fails the job; CacheScope.release() frees the
+      // blocks deterministically; and a cached partition computes once
+      // under the block-manager lock, so concurrent branches cannot race
+      // its writes the way a lazy checkpoint's first touch can
       .transform(c => scope.persisted(c, StorageLevel.MEMORY_AND_DISK))
     // exact sets only for docs that appear in some candidate pair —
     // computed per ROW after the semi-join, so the only shuffled shingle
@@ -856,21 +857,16 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
       scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) = nearDupParams(threshold)
-    val k = b * r
     // per-row scan expressions end to end (r8): fused signatures + distinct
     // shingle sets for candidate-touched docs — no exploded shingle
     // relation on either side
-    def sigsOf(side: DataFrame) =
-      minhashSignaturesRowLocal(side, textCol, idCol, n, k)
-    def bandsOf(sigs: DataFrame, out: String) = sigs.select(col("id").as(out),
-        posexplode(graft.functions.SketchFunctions.band_hashes(col("sig"), b, r)))
-      .select(col(out), col("pos").as("band"), col("col").as("bucket"))
-    val candidates = bandsOf(sigsOf(batch), "id_batch")
-      .join(bandsOf(sigsOf(corpus), "id_corpus"), Seq("band", "bucket"))
+    def bandsOf(side: DataFrame, out: String) =
+      bandRows(minhashSignaturesRowLocal(side, textCol, idCol, n, b * r), out, b, r)
+    val candidates = bandsOf(batch, "id_batch")
+      .join(bandsOf(corpus, "id_corpus"), Seq("band", "bucket"))
       .select("id_batch", "id_corpus").distinct()
       // scope-persisted for the three consumers below (two semi-joins +
       // the pair join) — see ngramJaccard's candidate note for why persist
@@ -941,7 +937,6 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      shingleStorage: StorageLevel = StorageLevel.DISK_ONLY,
       scope: CacheScope = CacheScope.untracked,
   ): DataFrame = {
     val (b, r) = nearDupParams(threshold)
@@ -949,17 +944,13 @@ object Dedup {
     // batch-side signatures and shingle sets are per-row scan expressions
     // (r8) — only the tiny band rows and candidate-touched sets shuffle
     val sigB = minhashSignaturesRowLocal(batch, textCol, idCol, n, k)
-    def bandsOf(sigs: DataFrame, out: String) = sigs.select(col(out),
-        posexplode(graft.functions.SketchFunctions.band_hashes(col("sig"), b, r)))
-      .select(col(out), col("pos").as("band"), col("col").as("bucket"))
     // per-row geometry guard: an index built at a different threshold has a
     // different signature width — banding it would silently change recall
     val guarded = index.filter(coalesce(assert_true(size(col("sig")) === k,
       concat(lit(s"near-dup index signature width "), size(col("sig")),
         lit(s" != $k — the index was built at a different threshold"))), lit(true)))
-    val candidates = bandsOf(sigB.select(col("id").as("id_batch"), col("sig")), "id_batch")
-      .join(bandsOf(guarded.select(col("id").as("id_corpus"), col("sig")), "id_corpus"),
-        Seq("band", "bucket"))
+    val candidates = bandRows(sigB, "id_batch", b, r)
+      .join(bandRows(guarded, "id_corpus", b, r), Seq("band", "bucket"))
       .select("id_batch", "id_corpus").distinct()
       // scope-persisted for the three consumers below (two semi-joins +
       // the pair join) — see ngramJaccard's candidate note
@@ -1319,14 +1310,17 @@ object Dedup {
     * larger than the input pairs. Duplicate graphs in practice (near-clique
     * clusters) converge in 2-3 rounds.
     *
-    * Input: one row per undirected candidate pair; node ids non-null
-    * numerics. Self-pairs are dropped; duplicate pair rows are fine.
-    * Returns `(id, component)` for every node that appears in ≥ 1 pair,
-    * where `component` is the MINIMUM node id reachable from `id` — the
-    * canonical label a keep-first rule wants (keep `id === component`,
-    * drop the rest). Nodes with no pairs are their own singleton clusters
-    * and are NOT emitted (join back to the corpus with a left join and
-    * `coalesce(component, id)` when full labeling is wanted).
+    * Input: one row per undirected candidate pair; node ids of any
+    * orderable atomic type, the two columns meeting at Spark's common type
+    * (Int and Long as Long). Null ids and self-pairs are dropped; duplicate
+    * pair rows are fine. Returns `(id, component)` in the id type for
+    * every node that appears in ≥ 1 pair, where `component` is the MINIMUM
+    * node id (Spark's ordering) reachable from `id` — the canonical label
+    * a keep-first rule wants (keep `id === component`, drop the rest).
+    * Nodes with no pairs are their own singleton clusters and are NOT
+    * emitted (join back to the corpus with a left join and
+    * `coalesce(component, id)` when full labeling is wanted). The rounds
+    * run over [[NodeCodes]].
     *
     * Driver-iterated, lineage-cut per round: each star step self-joins and
     * self-unions the edge frame, so the LOGICAL plan grows geometrically
@@ -1363,13 +1357,13 @@ object Dedup {
     // backfills any missing localCheckpoint partitions at job end) — one
     // job per round instead of two. Reliable checkpoints stay EAGER: the
     // lazy form recomputes the whole plan once more to write the files.
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(false)
+    def cut(df: DataFrame, eager: Boolean = false): DataFrame =
+      if (reliable) df.checkpoint(true) else df.localCheckpoint(eager)
+    val codes = NodeCodes(pairs, idA, idB, cut(_, eager = true))
     // canonical edge convention throughout: (u, v) with u > v — every edge
     // points at a smaller node, so "smaller neighbors of u" is exactly the
     // stored row set and star centers can only be component minima
-    val input = pairs
-      .select(col(idA).cast(LongType).as("a"), col(idB).cast(LongType).as("b"))
+    val input = codes.edges
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
@@ -1402,6 +1396,7 @@ object Dedup {
     var cur     = cut(input)
     var rounds  = 0
     var settled = cur.isEmpty // empty pair set: nothing to iterate
+    codes.release()
     while (!settled) {
       rounds += 1
       if (rounds > maxRounds)
@@ -1422,19 +1417,79 @@ object Dedup {
         .limit(1).count()
       // next is materialized and self-contained: the superseded round's
       // reliable checkpoint files can go now (no-op on the local branch)
-      if (reliable)
-        org.apache.spark.sql.GraftColumnBridge.checkpointFile(cur).foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(pairs.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
+      deleteCheckpointFile(cur)
       cur     = next
       settled = bad == 0L
     }
     // the returned lazy plan references the final (checkpointed) edge frame
     // twice — both scans read its stored blocks, nothing re-runs
-    cur.select(col("u").as("id"), col("v").as("component"))
-      .union(cur.select(col("v").as("id"), col("v").as("component")).distinct())
+    codes.decode(cur.select(col("u").as("id"), col("v").as("component"))
+      .union(cur.select(col("v").as("id"), col("v").as("component")).distinct()))
+  }
+
+  /** Deletes the reliable-checkpoint files behind `df`, if it is a
+    * `.checkpoint` result (a local checkpoint has none: no-op). */
+  private def deleteCheckpointFile(df: DataFrame): Unit =
+    org.apache.spark.sql.GraftColumnBridge.checkpointFile(df).foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+
+  /** A pair frame's node ids as ORDER-PRESERVING Long codes, shared by
+    * [[connectedComponents]] and [[CorpusPipeline.dupClusters]]' driver
+    * union-find: a component's minimum code is its minimum id on either
+    * path. `edges` is `(a, b)` codes, one row per pair; the id type is the
+    * columns' common type. Integral ids cast to Long and back (no job).
+    * Any other type is dictionary-coded: distinct + global sort of the
+    * node values, numbered by `monotonically_increasing_id` (partition
+    * index in the high bits, so codes rise with the sort order). The typed
+    * pairs and the dictionary pass through `cut`, an EAGER checkpoint, so
+    * the upstream plan computes once and the codes are fixed before
+    * several branches read them. Null ids get no code: their rows drop. */
+  private[operators] final class NodeCodes private (
+      val edges: DataFrame, idType: DataType, dict: Option[DataFrame],
+      typed: Option[DataFrame]) {
+
+    /** `(id, component)` Long codes back to the id type. */
+    def decode(codes: DataFrame): DataFrame = dict match {
+      case None if idType == LongType => codes
+      case None => codes.select(col("id").cast(idType).as("id"),
+        col("component").cast(idType).as("component"))
+      case Some(d) => codes
+        .join(d.select(col("code").as("id"), col("value").as("__id")), "id")
+        .join(d.select(col("code").as("component"), col("value").as("__c")), "component")
+        .select(col("__id").as("id"), col("__c").as("component"))
+    }
+
+    /** Deletes the typed pairs' reliable-checkpoint files once `edges` has
+      * been materialized downstream; the dictionary stays (decode reads it). */
+    def release(): Unit = typed.foreach(deleteCheckpointFile)
+  }
+
+  private[operators] object NodeCodes {
+    def apply(pairs: DataFrame, idA: String, idB: String,
+              cut: DataFrame => DataFrame): NodeCodes = {
+      val idType = pairs.select(col(idA).as("v"))
+        .union(pairs.select(col(idB).as("v"))).schema.head.dataType
+      idType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          new NodeCodes(pairs.select(col(idA).cast(LongType).as("a"),
+            col(idB).cast(LongType).as("b")), idType, None, None)
+        case _ =>
+          val typed = cut(pairs.select(col(idA).cast(idType).as("a"),
+            col(idB).cast(idType).as("b")))
+          val dict = cut(typed.select(col("a").as("value"))
+            .union(typed.select(col("b").as("value")))
+            .filter(col("value").isNotNull).distinct()
+            .orderBy("value")
+            .withColumn("code", monotonically_increasing_id()))
+          val edges = typed
+            .join(dict.select(col("value").as("a"), col("code").as("ca")), "a")
+            .join(dict.select(col("value").as("b"), col("code").as("cb")), "b")
+            .select(col("ca").as("a"), col("cb").as("b"))
+          new NodeCodes(edges, idType, Some(dict), Some(typed))
+      }
+    }
   }
 
   /** Duplicate-cluster table for a corpus: [[connectedComponents]] over a

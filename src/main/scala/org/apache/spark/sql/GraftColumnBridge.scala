@@ -18,6 +18,11 @@ object GraftColumnBridge {
     * .cleanCheckpoints` is set (default false), so driver-iterated
     * operators that checkpoint per round use this to delete superseded
     * rounds' files themselves. */
+  /** Blocks until every listener event posted so far has been delivered
+    * (the bus is otherwise asynchronous), so a listener's counters are
+    * complete when read — a drain without a guessed sleep. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   def checkpointFile(df: DataFrame): Option[String] =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.getCheckpointFile

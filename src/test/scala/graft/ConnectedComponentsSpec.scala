@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -86,8 +87,14 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // a multi-round run keeps only the FINAL round's rdd checkpoint
       // (plus the up-front input checkpoint's parent app dir structure)
       val appDir = new java.io.File(ckpt).listFiles().head
-      val rddDirs = appDir.listFiles().filter(_.getName.startsWith("rdd-"))
+      def rddDirs = appDir.listFiles().filter(_.getName.startsWith("rdd-"))
       assert(rddDirs.length == 1, rddDirs.map(_.getName).mkString(","))
+      // dictionary-coded ids: the typed-pair checkpoint goes once the
+      // coded input is materialized; the dictionary stays (decode reads it)
+      val s = Dedup.connectedComponents(Seq(("b", "a"), ("c", "b")).toDF("id_a", "id_b"))
+      assert(s.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+        Map("a" -> "a", "b" -> "a", "c" -> "a"))
+      assert(rddDirs.length == 3, rddDirs.map(_.getName).mkString(","))
     } finally {
       // TestSpark is shared: restore the local branch for other tests
       val f = spark.sparkContext.getClass.getMethods
@@ -95,6 +102,20 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       f.invoke(spark.sparkContext, None)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
+  }
+
+  test("non-integral ids keep their type and order: strings, fractional doubles") {
+    // strings label by string order, not through a numeric cast
+    val s = Dedup.connectedComponents(
+      Seq(("b", "a"), ("c", "b"), ("y", "x"), ("x", null)).toDF("id_a", "id_b"))
+    assert(s.schema.map(_.dataType) == Seq(StringType, StringType))
+    assert(s.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+    // 1.2 and 1.7 are two nodes, never one truncated node 1
+    val d = Dedup.connectedComponents(Seq((1.2, 2.5), (1.7, 3.5)).toDF("id_a", "id_b"))
+    assert(d.schema.map(_.dataType) == Seq(DoubleType, DoubleType))
+    assert(d.collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap ==
+      Map(1.2 -> 1.2, 2.5 -> 1.2, 1.7 -> 1.7, 3.5 -> 1.7))
   }
 
   test("clusterTable carries sizes; keep-first rule = id === component") {

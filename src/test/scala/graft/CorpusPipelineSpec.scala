@@ -39,13 +39,46 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(iDf.schema.fields(1).dataType == org.apache.spark.sql.types.IntegerType)
     assert(iDf.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
       Map(1 -> 1, 2 -> 1, 3 -> 1))
-    // non-numeric ids keep the propagation fallback — same labeling
+    // non-numeric ids: same labeling on both paths
     val sPairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
     val sDriver = CorpusPipeline.dupClusters(sPairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val sDist = CorpusPipeline.dupClusters(sPairs, maxRounds = 10, maxDriverPairs = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sDriver == sDist && sDist("c") == "a" && sDist("y") == "x")
+
+    // every id type: both paths give the SAME labels, each the minimum id
+    // of its cluster under Spark's ordering, in the ids' common type
+    import org.apache.spark.sql.types._
+    def bothPaths(pairs: org.apache.spark.sql.DataFrame, idType: DataType,
+                  expected: Map[_, _]): Unit = {
+      val driverDf = CorpusPipeline.dupClusters(pairs)
+      val distDf   = CorpusPipeline.dupClusters(pairs, maxDriverPairs = 0L)
+      for (df <- Seq(driverDf, distDf)) {
+        assert(df.schema.map(_.dataType) == Seq(idType, idType), df.schema)
+        assert(df.collect().map(r => r.get(0) -> r.get(1)).toMap == expected)
+      }
+    }
+    // Short {9, 10}: 9 < 10 numerically, although "10" < "9" as strings
+    bothPaths(Seq((10.toShort, 9.toShort)).toDF("id_a", "id_b"), ShortType,
+      Map(9.toShort -> 9.toShort, 10.toShort -> 9.toShort))
+    // decimal ids, labels exact in the decimal type
+    val d = (s: String) => new java.math.BigDecimal(s)
+    bothPaths(Seq((d("10.50"), d("9.25")), (d("9.25"), d("100.00")), (d("7.00"), d("8.00")))
+        .toDF("id_a", "id_b").select($"id_a".cast("decimal(10,2)").as("id_a"),
+          $"id_b".cast("decimal(10,2)").as("id_b")),
+      DecimalType(10, 2),
+      Map(d("9.25") -> d("9.25"), d("10.50") -> d("9.25"), d("100.00") -> d("9.25"),
+        d("7.00") -> d("7.00"), d("8.00") -> d("7.00")))
+    // mixed Int / Long columns meet at Long
+    bothPaths(Seq((3, 5000000000L), (7, 3L)).toDF("id_a", "id_b"),
+      LongType, Map(3L -> 3L, 5000000000L -> 3L, 7L -> 3L))
+    // a 12-node chain: min-label propagation needs 11 rounds, so a
+    // default maxRounds of 5 must not truncate it; zero-padded strings
+    // keep string order = numeric order
+    val chain = (1 until 12).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    bothPaths(chain.toDF("id_a", "id_b"), StringType,
+      (1 to 12).map(i => f"n$i%02d" -> "n01").toMap)
   }
 
   test("full clean keeps one survivor per dup cluster and drops junk") {

@@ -95,6 +95,35 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(j((1L, 2L)) == 1.0)
     assert(j((1L, 3L)) > 0.3 && j((1L, 3L)) < 1.0)
+
+    // one word apart: exact 3-gram Jaccard 78/84 ≈ 0.93, but the 128-slot
+    // minhash estimate is below 0.6 — every band collision must still
+    // reach the exact verify
+    val near = Seq(
+      (10L, "kelsa samorjin dordorver ruti zepolnix mor briverash jinver pol nixsel " +
+        "zepolnix rashupwix rulo galras zegal yan nixrumi yan yanselne verpolulm hup " +
+        "samorka quaashqua yan ephquaeph kelhupfen yan dorkator hup bri fen zolkelru " +
+        "voephulm ulmze yan morgalulm zefenvo sajin yanashze dorze yan tordorsel " +
+        "saselfen yan vozolmi sa mitine brigal saselfen vermoreph ulmjin yan zolkelru " +
+        "selquaash hupsel nixrumi vozewix ashkati zepolnix fenlovo ephbri yan rubriver " +
+        "yan torgalmi zepolnix negalgal hup hupkakel jinzewix zepolnix verquador hup " +
+        "brigal ephmorlo lojinzol zolverti mi fenlo yan kahup bribrilo sa"),
+      (11L, "kelsa samorjin dordorver ruti zepolnix mor briverash jinver pol nixsel " +
+        "zepolnix rashupwix rulo galras zegal yan nixrumi yan yanselne verpolulm hup " +
+        "samorka quaashqua yan ephquaeph kelhupfen yan dorkator hup bri fen zolkelru " +
+        "voephulm ulmze yan morgalulm zefenvo sajin yanashze dorze yan tordorsel " +
+        "ras yan vozolmi sa mitine brigal saselfen vermoreph ulmjin yan zolkelru " +
+        "selquaash hupsel nixrumi vozewix ashkati zepolnix fenlovo ephbri yan rubriver " +
+        "yan torgalmi zepolnix negalgal hup hupkakel jinzewix zepolnix verquador hup " +
+        "brigal ephmorlo lojinzol zolverti mi fenlo yan kahup bribrilo sa"),
+    ).toDF("doc_id", "text")
+    val sig = Dedup.minhashSignaturesRowLocal(near, "text", "doc_id", 3, 128)
+      .orderBy("id").collect().map(_.getSeq[Long](1))
+    assert(sig(0).zip(sig(1)).count { case (x, y) => x == y } / 128.0 < 0.6)
+    val nj = Dedup.ngramJaccard(near, "text", "doc_id", threshold = 0.8)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(nj.keySet == Set((10L, 11L)), nj.toString)
+    assert(math.abs(nj((10L, 11L)) - 78.0 / 84.0) < 1e-12, nj.toString)
   }
 
   test("exact dup stats: histogram buckets by cluster size, doc counts add up") {
